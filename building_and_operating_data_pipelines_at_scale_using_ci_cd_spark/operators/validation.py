@@ -10,7 +10,10 @@ Scale notes:
     on the PK, the same shuffle a groupBy-dedup would pay, but it keeps
     every column and gives deterministic survivor selection.
   - We return (good, bad) as two lazily-derived DataFrames off one parent;
-    callers that need both should cache the parent, not each child.
+    callers that need both should materialize the parent, not each child.
+  - :func:`tag_lanes` is both splits as ONE plan: a lane column instead of
+    separate frames, so one materialization (and one window shuffle)
+    serves the good view and every error lane.
 """
 
 from __future__ import annotations
@@ -24,6 +27,23 @@ from pyspark.sql import functions as F
 #: internal column used by the dedup window; never leaks to outputs
 _RN = "__pipelines_rn"
 
+#: lane column added by :func:`tag_lanes`; NULL marks a good row
+LANE = "__pipelines_lane"
+NULL_PRIMARY_KEY = "null_primary_key"
+DUPLICATE_RECORD = "duplicate_record"
+
+
+def _null_key_cond(primary_keys: list[str]) -> Column:
+    return reduce(or_, [F.col(k).isNull() for k in primary_keys])
+
+
+def _survivor_order(
+    df: DataFrame, primary_keys: list[str], order_by_cols: list[str] | None, descending: bool
+) -> list[Column]:
+    if order_by_cols:
+        return [F.col(c).desc() if descending else F.col(c).asc() for c in order_by_cols]
+    return [F.col(c).asc() for c in df.columns if c not in primary_keys] or [F.lit(1).asc()]
+
 
 def null_pk_split(df: DataFrame, primary_keys: list[str]) -> tuple[DataFrame, DataFrame]:
     """V1 (spark.json:43-46): rows with NULL in any PK column are invalid.
@@ -33,7 +53,7 @@ def null_pk_split(df: DataFrame, primary_keys: list[str]) -> tuple[DataFrame, Da
     """
     if not primary_keys:
         return df, df.limit(0)
-    bad_cond: Column = reduce(or_, [F.col(k).isNull() for k in primary_keys])
+    bad_cond = _null_key_cond(primary_keys)
     return df.filter(~bad_cond), df.filter(bad_cond)
 
 
@@ -52,17 +72,40 @@ def dedup_split(
     """
     if not primary_keys:
         return df, df.limit(0)
-    if order_by_cols:
-        order = [F.col(c).desc() if descending else F.col(c).asc() for c in order_by_cols]
-    else:
-        order = [F.col(c).asc() for c in df.columns if c not in primary_keys] or [
-            F.lit(1).asc()
-        ]
+    order = _survivor_order(df, primary_keys, order_by_cols, descending)
     w = Window.partitionBy(*primary_keys).orderBy(*order)
     numbered = df.withColumn(_RN, F.row_number().over(w))
     survivors = numbered.filter(F.col(_RN) == 1).drop(_RN)
     duplicates = numbered.filter(F.col(_RN) > 1).drop(_RN)
     return survivors, duplicates
+
+
+def tag_lanes(
+    df: DataFrame,
+    null_keys: list[str],
+    dup_keys: list[str],
+    dup_order_by_cols: list[str] | None = None,
+) -> DataFrame:
+    """V1 then V2 as one plan: ``df`` plus a :data:`LANE` column holding
+    ``null_primary_key`` when any ``null_keys`` column is NULL, otherwise
+    ``duplicate_record`` when the row is not its ``dup_keys`` group's
+    survivor, otherwise NULL (the row is good).
+
+    The lanes equal :func:`null_pk_split` followed by :func:`dedup_split`
+    on its valid side, even when the two key lists differ: rows failing V1
+    sort after every other row of their window partition, so valid rows
+    are numbered exactly as ``dedup_split`` numbers them once the invalid
+    rows are gone. An empty key list disables that check.
+    """
+    null = _null_key_cond(null_keys) if null_keys else F.lit(False)
+    lane = F.when(null, F.lit(NULL_PRIMARY_KEY))
+    if dup_keys:
+        order = _survivor_order(df, dup_keys, dup_order_by_cols, descending=True)
+        if null_keys:
+            order = [null.asc(), *order]
+        rn = F.row_number().over(Window.partitionBy(*dup_keys).orderBy(*order))
+        lane = lane.when(rn > 1, F.lit(DUPLICATE_RECORD))
+    return df.withColumn(LANE, lane)
 
 
 def count_within_threshold(

@@ -19,8 +19,10 @@ Execution model (SURVEY.md §3, entry point A):
      post hooks (spark.json:68-107)
 
 Scale notes: views are lazy; nothing is collected except validation counts
-(which the dialect requires). When both the good and bad lanes of a
-validation are consumed, the parent is cached once to avoid a double scan.
+(which the dialect requires). A validated run tags every row with its lane
+in one plan and materializes it once (one eager ``localCheckpoint``, one
+window shuffle); the lane counts are an ``Observation`` on that job, and
+the good view and each error lane are filters over its result.
 """
 
 from __future__ import annotations
@@ -29,12 +31,24 @@ import subprocess
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import JobConfig
 from ..operators.cleansing import remove_junk_characters
 from ..operators.runledger import RunLedger, input_fingerprint
-from ..operators.validation import bad_fraction, count_within_threshold, dedup_split, null_pk_split
+# null_pk_split / dedup_split stay bound here: perfbench/tracing.py wraps
+# the engine's names
+from ..operators.validation import (  # noqa: F401
+    DUPLICATE_RECORD,
+    LANE,
+    NULL_PRIMARY_KEY,
+    bad_fraction,
+    count_within_threshold,
+    dedup_split,
+    null_pk_split,
+    tag_lanes,
+)
 from ..session import apply_job_confs
 from ..sinks.writers import archive_input, write_error_records, write_target
 
@@ -54,6 +68,11 @@ class JobResult:
     output_name: str | None = None
     input_count: int = 0
     bad_count: int = 0
+    #: rows per validation lane (``good`` plus each error lane); empty
+    #: when the run did not validate
+    lane_counts: dict[str, int] = field(default_factory=dict)
+    #: ``sparkConfig`` keys the live session refused
+    confs_not_applied: list[str] = field(default_factory=list)
     write_results: list[dict] = field(default_factory=list)
     skipped_duplicate_run: bool = False
     phase_secs: dict[str, float] = field(default_factory=dict)
@@ -72,6 +91,8 @@ class JobResult:
             "skipped_duplicate_run": self.skipped_duplicate_run,
             "input_count": self.input_count,
             "bad_count": self.bad_count,
+            "lane_counts": self.lane_counts,
+            "confs_not_applied": self.confs_not_applied,
             "output_name": self.output_name,
             "views": sorted(self.views),
             "phase_secs": {k: round(v, 3) for k, v in self.phase_secs.items()},
@@ -123,7 +144,8 @@ class Orchestrator:
                 "JobConfig has already had its placeholders resolved"
             )
 
-        apply_job_confs(self.spark, config.spark_config)
+        result = JobResult(job_name=config.name)
+        result.confs_not_applied = apply_job_confs(self.spark, config.spark_config)
         if config.temp_path:
             # W13 (spark.json:9): engine scratch / checkpoint location
             import os as _os
@@ -131,7 +153,6 @@ class Orchestrator:
             self.spark.sparkContext.setCheckpointDir(
                 _os.path.join(config.temp_path, "checkpoints")
             )
-        result = JobResult(job_name=config.name)
         import time as _time
 
         t_start = _time.monotonic()
@@ -188,14 +209,11 @@ class Orchestrator:
         self._run_scripts(config.pre_scripts)
 
         t0 = _time.monotonic()
-        views = self._phase1_ingest(config)
-        result.views.update(views)
+        result.views.update(self._phase1_ingest(config))
         result.phase_secs["ingest"] = _time.monotonic() - t0
 
         t0 = _time.monotonic()
-        good, bad_lanes = self._phase2_validate(config, views)
-        if good is not None:
-            result.input_count = good.count() if config.data_validation_required else 0
+        bad_lanes = self._phase2_validate(config, result)
         result.phase_secs["validate"] = _time.monotonic() - t0
 
         t0 = _time.monotonic()
@@ -205,14 +223,10 @@ class Orchestrator:
         t0 = _time.monotonic()  # quarantine + gates + loads ("load" phase)
 
         # error lane → quarantine sink + threshold gate
-        total_bad = 0
-        if bad_lanes and config.error_sink:
-            for reason, lane in bad_lanes:
-                total_bad += write_error_records(self.spark, lane, config.error_sink, reason)
-        elif bad_lanes:
-            for _, lane in bad_lanes:
-                total_bad += lane.count()
-        result.bad_count = total_bad
+        if config.error_sink:
+            for reason, lane, n in bad_lanes:
+                write_error_records(self.spark, lane, config.error_sink, reason, n)
+        total_bad = result.bad_count = sum(n for _, _, n in bad_lanes)
         # V4 gate: active whenever validation is on AND thresholdLimit was
         # given. An explicit "0%" means zero tolerance (any bad row fails)
         # — consistent with V3 below, where 0 means exact count match; a
@@ -311,14 +325,16 @@ class Orchestrator:
         return views
 
     def _phase2_validate(
-        self, config: JobConfig, views: dict[str, DataFrame]
-    ) -> tuple[DataFrame | None, list[tuple[str, DataFrame]]]:
-        """Applies V1/V2 to the primary input view; good lane replaces the
-        view so transformations see only valid rows."""
+        self, config: JobConfig, result: JobResult
+    ) -> list[tuple[str, DataFrame, int]]:
+        """Applies V1/V2 to the primary input view; the good lane replaces
+        the view so transformations and targets see only valid rows. Fills
+        in the result's lane counts and returns ``(reason, rows, count)``
+        per enabled error lane."""
         if not config.data_validation_required or not config.primary_input:
-            return None, []
+            return []
         name = config.primary_input.dataframe_name
-        df = views[name]
+        df = result.views[name]
         if df.isStreaming:
             raise NotImplementedError(
                 "count-based validations need bounded input; for streaming "
@@ -326,24 +342,35 @@ class Orchestrator:
                 "data_validation_required false"
             )
         v = config.validations
-        bad_lanes: list[tuple[str, DataFrame]] = []
-        # materialize the parent once: both lanes of each split re-scan
-        # it. localCheckpoint, NOT cache (round 13 — the same
-        # no-CacheManager rule the operators adopted in round 12: a
-        # cached deterministic subtree is silently substituted into any
-        # identical later plan, leaking state across runs and pinning
-        # memory for the session's lifetime; engine jobs are one-shot
-        # but must obey the same hygiene)
-        df = df.localCheckpoint(eager=False)
-        if v.null_value_validation and v.null_primary_keys:
-            df, bad = null_pk_split(df, v.null_primary_keys)
-            bad_lanes.append(("null_primary_key", bad))
-        if v.duplicate_record_validation and v.dup_primary_keys:
-            df, dups = dedup_split(df, v.dup_primary_keys, v.dup_order_by_cols)
-            bad_lanes.append(("duplicate_record", dups))
-        df.createOrReplaceTempView(name)
-        views[name] = df
-        return df, bad_lanes
+        null_keys = v.null_primary_keys if v.null_value_validation else []
+        dup_keys = v.dup_primary_keys if v.duplicate_record_validation else []
+        lanes = ((NULL_PRIMARY_KEY, null_keys), (DUPLICATE_RECORD, dup_keys))
+        reasons = [r for r, keys in lanes if keys]
+        lane = F.col(LANE)
+        obs = Observation()
+        # One eager materialization serves the good view and every error
+        # lane, and counts them on the way: the input scan and the dedup
+        # window run once per run, not once per consumer. localCheckpoint,
+        # NOT cache: a cached deterministic subtree is silently substituted
+        # into any identical later plan, leaking state across runs and
+        # pinning memory for the session's lifetime.
+        tagged = (
+            tag_lanes(df, null_keys, dup_keys, v.dup_order_by_cols)
+            .observe(
+                obs,
+                F.count_if(lane.isNull()).alias("good"),
+                *[F.count_if(lane == r).alias(r) for r in reasons],
+            )
+            .localCheckpoint(eager=True)
+        )
+        result.lane_counts = obs.get
+        result.input_count = result.lane_counts["good"]
+        good = tagged.filter(lane.isNull()).drop(LANE)
+        good.createOrReplaceTempView(name)
+        result.views[name] = good
+        return [
+            (r, tagged.filter(lane == r).drop(LANE), result.lane_counts[r]) for r in reasons
+        ]
 
     def _phase2_transform(self, config: JobConfig, result: JobResult) -> str | None:
         """Ordered transformation chain; each step sees all prior views

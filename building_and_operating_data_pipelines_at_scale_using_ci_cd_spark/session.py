@@ -73,14 +73,19 @@ def get_session(
     return builder.getOrCreate()
 
 
-def apply_job_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+def apply_job_confs(spark: SparkSession, confs: dict[str, str]) -> list[str]:
     """Apply a job's ``sparkConfig`` map to a live session (O8 passthrough,
     reference ``spark.json:3-6``). Only runtime-mutable SQL confs take
-    effect on a live session; that covers the dialect's documented keys."""
+    effect on a live session; that covers the dialect's documented keys.
+
+    Returns the keys the session refused, in config order; the job runs
+    on without them."""
+    not_applied = []
     for k, v in confs.items():
         try:
             spark.conf.set(k, str(v))
         except Exception:
             # Static confs (executor memory etc.) can't change post-launch;
             # the reference applies those at submit time (deploy.yaml:16-18).
-            pass
+            not_applied.append(k)
+    return not_applied

@@ -25,7 +25,8 @@ import os
 import shutil
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.scd2 import scd2_merge, SCD2_META_COLS
 
@@ -278,8 +279,6 @@ def _scd2_delta_merge(spark: SparkSession, dt, df: DataFrame, spec: "TargetSpec"
     Standard two-lane staging: each incoming row appears once keyed (to
     close a changed current row) and, when it changes an existing key,
     once with a NULL merge key (to fall through to the insert clause)."""
-    from pyspark.sql import functions as F
-
     from ..operators.scd2 import EFF_END, EFF_START, IS_CURRENT, _HIGH_TS
 
     keys = spec.scd2_keys
@@ -335,8 +334,6 @@ def _scd2_merge_staging(
         through to whenNotMatchedInsert with the row's new version. A
         brand-new key needs no NULL-key row — its KEYED row already
         matches nothing and inserts (a second lane would double-insert)."""
-    from pyspark.sql import functions as F
-
     from ..operators.scd2 import IS_CURRENT, _dedup_incoming, _fingerprint
 
     data_cols = [c for c in target_df.columns if c not in SCD2_META_COLS]
@@ -513,6 +510,12 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
             except Exception:
                 pre_existing = 0  # unreadable/empty dir: treat as fresh target
 
+    # V6 expected count as a side effect of the write: the plain file
+    # writer runs the whole plan in one job, so an Observation on the
+    # written frame sees every row once. Excel (a bounded collect),
+    # delta-lite (a staged commit), the other sinks and hash mode count
+    # separately.
+    obs = None
     if mode == "scd2" or load == "scdType2Insert":
         _scd2_write(spark, df, spec)
     elif spec.data_target == "catalog":
@@ -521,6 +524,13 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
         _write_jdbc(df, spec, mode)
     elif spec.data_target == "sftp":
         _write_sftp(spark, df, spec, mode)
+    elif (
+        spec.reconciliation
+        and spec.reconciliation_mode != "hash"
+        and _fmt(spec.file_format) not in ("excel", "delta")
+    ):
+        obs = Observation()
+        _write_file(df.observe(obs, F.count(F.lit(1)).alias("rows")), spec, mode)
     else:
         _write_file(df, spec, mode)
 
@@ -538,7 +548,7 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
             written_df = _read_back(spark, spec)
             result["reconciliation"] = reconcile_hash(df, written_df)
         else:
-            expected = df.count()
+            expected = obs.get["rows"] if obs is not None else df.count()
             written = _read_back(spark, spec).count()
             if load == "scdType2Insert":
                 # merge output ≥ snapshot (history rows carried through)
@@ -554,13 +564,18 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
 
 
 def write_error_records(
-    spark: SparkSession, bad: DataFrame, spec: "ErrorSinkSpec", reason: str
+    spark: SparkSession,
+    bad: DataFrame,
+    spec: "ErrorSinkSpec",
+    reason: str,
+    n: int | None = None,
 ) -> int:
     """W11: quarantine the error lane (``spark.json:97-101``), tagged with
-    the failing validation."""
-    from pyspark.sql import functions as F
-
-    n = bad.count()
+    the failing validation. ``n`` is the lane's row count when the caller
+    already knows it; otherwise the lane is counted first. An empty lane
+    writes nothing. Returns the row count."""
+    if n is None:
+        n = bad.count()
     if n == 0:
         return 0
     tagged = bad.withColumn("__error_reason", F.lit(reason))

@@ -11,6 +11,12 @@ TABLES = [
 ]
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: end-to-end example and pipeline runs (deselect with -m 'not slow')"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_session(

@@ -1,17 +1,28 @@
 """Engine lanes through the config dialect: error quarantine + threshold
 gate (V4/W11, spark.json:7,97-101), duplicate-run ledger (V5, spark.json:8),
 input archival (W12, spark.json:10-12), single-file output with prefix
-(W3, spark.json:77-78,89-90), and compression (W4, spark.json:93)."""
+(W3, spark.json:77-78,89-90), compression (W4, spark.json:93), and the
+single-pass validated run: lanes tagged in one plan, lane and
+reconciliation counts read from Observations (V6, spark.json:80)."""
 
 import glob
 import os
 
 import pytest
 
+from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.operators.validation import (
+    DUPLICATE_RECORD,
+    LANE,
+    NULL_PRIMARY_KEY,
+    dedup_split,
+    null_pk_split,
+    tag_lanes,
+)
 from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.plans.engine import (
     Orchestrator,
     ThresholdExceeded,
 )
+from building_and_operating_data_pipelines_at_scale_using_ci_cd_spark.sinks import writers
 
 
 def _base_config(name, src_path, out_path, **configs_extra):
@@ -104,8 +115,10 @@ def test_threshold_exceeded_fails_job(spark, tmp_path, dirty_src):
     cfg = _with_validation(
         _base_config("lanes_fail", dirty_src, str(tmp_path / "out2"), thresholdLimit="30%")
     )
+    out = cfg["phase_3"]["target_record_insert"][0]["path"]
     with pytest.raises(ThresholdExceeded):
         Orchestrator(spark).run(cfg)
+    assert not os.path.exists(out)  # the gate fires before any target write
 
 
 def test_duplicate_run_ledger_skips_second_run(spark, tmp_path, dirty_src):
@@ -257,3 +270,127 @@ def test_single_file_csv_with_prefix_and_compression(spark, tmp_path, dirty_src)
     assert os.path.isfile(os.path.join(out, "daily_export.csv.gz"))
     df = spark.read.option("header", "true").csv(os.path.join(out, "daily_export.csv.gz"))
     assert df.count() == 6
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize(
+    "null_keys, dup_keys, order_by",
+    [
+        (["a"], ["a", "b"], ["ts"]),  # null keys a subset of the dup keys
+        (["b"], ["a"], ["ts"]),  # disjoint: V1 failures share V2 windows
+        (["b"], ["a"], None),  # survivor by all non-key columns
+        (["a"], [], ["ts"]),
+        ([], ["a", "b"], ["ts"]),
+    ],
+)
+def test_tag_lanes_match_split_composition(spark, null_keys, dup_keys, order_by):
+    """The one-plan lanes hold exactly the rows of null_pk_split followed by
+    dedup_split on its valid side, including rows NULL in only one key."""
+    df = spark.createDataFrame(
+        [
+            (1, 1, 1, "p"), (1, 1, 2, "q"), (1, 1, 3, "r"),
+            (1, None, 4, "s"), (1, None, 5, "t"),
+            (None, 1, 6, "u"), (None, 1, 7, "v"), (None, None, 8, "w"),
+            (2, 1, 9, "x"), (2, None, 10, "y"), (3, 2, 11, "z"),
+        ],
+        "a int, b int, ts int, v string",
+    )
+    valid, invalid = null_pk_split(df, null_keys)
+    survivors, dups = dedup_split(valid, dup_keys, order_by)
+    tagged = tag_lanes(df, null_keys, dup_keys, order_by)
+    lane = tagged[LANE]
+    assert _rows(tagged.filter(lane.isNull()).drop(LANE)) == _rows(survivors)
+    assert _rows(tagged.filter(lane == NULL_PRIMARY_KEY).drop(LANE)) == _rows(invalid)
+    assert _rows(tagged.filter(lane == DUPLICATE_RECORD).drop(LANE)) == _rows(dups)
+
+
+def _reconciled_error_sink_config(src, tmp_path):
+    out, err = str(tmp_path / "out"), str(tmp_path / "errors")
+    cfg = _with_validation(_base_config("lanes_once", src, out, thresholdLimit="60%"))
+    cfg["phase_3"]["target_record_insert"][0]["reconciliation"] = "true"
+    cfg["phase_3"]["ErrorRecordInsert"] = {"fileTarget": "local", "targetS3Location": err}
+    return cfg, out, err
+
+
+def test_validated_run_counts_once(spark, tmp_path, dirty_src, monkeypatch):
+    """Lane counts come from the materialization and the reconciliation's
+    expected count from the write: the only DataFrame.count left is the
+    target read-back."""
+    cfg, out, err = _reconciled_error_sink_config(dirty_src, tmp_path)
+    df_class = type(spark.range(0))
+    calls = []
+    real_count = df_class.count
+
+    def counting(self):
+        calls.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(df_class, "count", counting)
+    result = Orchestrator(spark).run(cfg)
+    assert len(calls) <= 1
+    monkeypatch.undo()
+    assert (result.input_count, result.bad_count) == (3, 3)
+    assert result.lane_counts == {"good": 3, NULL_PRIMARY_KEY: 2, DUPLICATE_RECORD: 1}
+    rec = result.write_results[0]["reconciliation"]
+    assert rec["ok"] and rec["expected"] == rec["written"] == 3
+    assert spark.read.parquet(err).count() == 3
+
+
+def test_empty_lanes_write_no_error_files(spark, tmp_path):
+    src = str(tmp_path / "clean_src")
+    spark.createDataFrame(
+        [(1, "2024-01-01", "a"), (2, "2024-01-01", "b")], "pk int, ts string, v string"
+    ).write.parquet(src)
+    cfg, out, err = _reconciled_error_sink_config(src, tmp_path)
+    result = Orchestrator(spark).run(cfg)
+    assert result.bad_count == 0
+    assert result.lane_counts == {"good": 2, NULL_PRIMARY_KEY: 0, DUPLICATE_RECORD: 0}
+    assert not os.path.exists(err)
+    assert spark.read.parquet(out).count() == 2
+
+
+def test_reconciliation_flags_lost_rows(spark, tmp_path, dirty_src, monkeypatch):
+    """A row missing from the target at read-back: the observed count of
+    what was written no longer matches it."""
+    cfg, out, _ = _reconciled_error_sink_config(dirty_src, tmp_path)
+    real_read_back = writers._read_back
+    monkeypatch.setattr(
+        writers, "_read_back", lambda spark, spec: real_read_back(spark, spec).filter("pk <> 3")
+    )
+    rec = Orchestrator(spark).run(cfg).write_results[0]["reconciliation"]
+    assert (rec["expected"], rec["written"], rec["ok"]) == (3, 2, False)
+
+
+def test_targets_read_the_validated_view(spark, tmp_path, dirty_src):
+    """A target naming the validated input directly gets the good lane."""
+    out = str(tmp_path / "direct")
+    cfg = _with_validation(_base_config("direct", dirty_src, out, thresholdLimit="60%"))
+    cfg["phase_2"].pop("data_transformations")
+    cfg["phase_3"]["target_record_insert"][0]["dataFrameName"] = "src"
+    Orchestrator(spark).run(cfg)
+    assert sorted(r["v"] for r in spark.read.parquet(out).collect()) == ["d", "e", "f"]
+
+
+def test_run_record_lane_counts_and_refused_confs(spark, tmp_path, dirty_src):
+    import json
+
+    mdir = str(tmp_path / "metrics")
+    cfg = _with_validation(
+        _base_config(
+            "record",
+            dirty_src,
+            str(tmp_path / "out"),
+            thresholdLimit="60%",
+            metricsPath=mdir,
+            sparkConfig={"spark.sql.broadcastTimeout": "3000", "spark.executor.memory": "2g"},
+        )
+    )
+    Orchestrator(spark).run(cfg)
+    (path,) = glob.glob(os.path.join(mdir, "record_*.json"))
+    with open(path) as fh:
+        rec = json.load(fh)
+    assert rec["lane_counts"] == {"good": 3, NULL_PRIMARY_KEY: 2, DUPLICATE_RECORD: 1}
+    assert rec["confs_not_applied"] == ["spark.executor.memory"]
