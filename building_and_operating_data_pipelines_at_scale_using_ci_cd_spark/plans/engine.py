@@ -225,7 +225,8 @@ class Orchestrator:
         # error lane → quarantine sink + threshold gate
         if config.error_sink:
             for reason, lane, n in bad_lanes:
-                write_error_records(self.spark, lane, config.error_sink, reason, n)
+                if n:  # an empty lane writes nothing
+                    write_error_records(self.spark, lane, config.error_sink, reason)
         total_bad = result.bad_count = sum(n for _, _, n in bad_lanes)
         # V4 gate: active whenever validation is on AND thresholdLimit was
         # given. An explicit "0%" means zero tolerance (any bad row fails)
@@ -242,13 +243,16 @@ class Orchestrator:
         # V3 transformed-count validation
         # Semantics (the reference never defines them, SURVEY.md §7.3d):
         # |input - output| / input must be ≤ thresholdLimit; with a zero
-        # threshold the counts must match exactly. Opt-in per job.
+        # threshold the counts must match exactly. Opt-in per job. In a
+        # validated run the input is the good lane's observed count, even
+        # when it is 0; otherwise the primary input is counted here.
         if config.transformed_count_validation and out_name and not result.views[out_name].isStreaming:
-            input_count = result.input_count or (
-                result.views[config.primary_input.dataframe_name].count()
-                if config.primary_input
-                else 0
-            )
+            if result.lane_counts:
+                input_count = result.input_count
+            elif config.primary_input:
+                input_count = result.views[config.primary_input.dataframe_name].count()
+            else:
+                input_count = 0
             out_count = result.views[out_name].count()
             limit = config.threshold_limit or 0.0
             if not count_within_threshold(input_count, out_count, limit):

@@ -564,20 +564,11 @@ def write_target(spark: SparkSession, df: DataFrame, spec: "TargetSpec") -> dict
 
 
 def write_error_records(
-    spark: SparkSession,
-    bad: DataFrame,
-    spec: "ErrorSinkSpec",
-    reason: str,
-    n: int | None = None,
-) -> int:
+    spark: SparkSession, bad: DataFrame, spec: "ErrorSinkSpec", reason: str
+) -> None:
     """W11: quarantine the error lane (``spark.json:97-101``), tagged with
-    the failing validation. ``n`` is the lane's row count when the caller
-    already knows it; otherwise the lane is counted first. An empty lane
-    writes nothing. Returns the row count."""
-    if n is None:
-        n = bad.count()
-    if n == 0:
-        return 0
+    the failing validation. The caller skips empty lanes: it knows their
+    counts, and an empty lane must write nothing."""
     tagged = bad.withColumn("__error_reason", F.lit(reason))
     if spec.file_target == "database":
         # quarantine straight into the DB next to the data it failed to
@@ -595,9 +586,8 @@ def write_error_records(
         for k, v in spec.jdbc_properties.items():
             writer = writer.option(k, v)
         writer.save()
-        return n
+        return
     tagged.write.mode("append").format(_fmt(spec.file_format)).save(spec.path)
-    return n
 
 
 def archive_input(

@@ -364,6 +364,46 @@ def test_reconciliation_flags_lost_rows(spark, tmp_path, dirty_src, monkeypatch)
     assert (rec["expected"], rec["written"], rec["ok"]) == (3, 2, False)
 
 
+def test_v3_counts_the_good_lane_when_every_row_is_invalid(spark, tmp_path, monkeypatch):
+    """Every row fails V1 and no thresholdLimit is set (V4 off): V3 takes
+    its input from the good lane's observed count, 0, without a count job,
+    so an empty output passes and the whole input lands in quarantine."""
+    src = str(tmp_path / "all_null_src")
+    spark.createDataFrame(
+        [(None, "2024-01-01", "a"), (None, "2024-01-02", "b")], "pk int, ts string, v string"
+    ).write.parquet(src)
+    out, err = str(tmp_path / "out"), str(tmp_path / "errors")
+    cfg = _with_validation(_base_config("all_bad", src, out))
+    cfg["phase_2"]["transformed_data_count_validation"] = "true"
+    cfg["phase_3"]["ErrorRecordInsert"] = {"fileTarget": "local", "targetS3Location": err}
+    df_class = type(spark.range(0))
+    calls = []
+    real_count = df_class.count
+    monkeypatch.setattr(df_class, "count", lambda self: calls.append(1) or real_count(self))
+    result = Orchestrator(spark).run(cfg)
+    n_calls = len(calls)
+    monkeypatch.undo()
+    # the only count job left is V3's count of the output view
+    assert n_calls == 1
+    assert result.input_count == 0
+    assert result.lane_counts == {"good": 0, NULL_PRIMARY_KEY: 2, DUPLICATE_RECORD: 0}
+    assert spark.read.parquet(out).count() == 0
+    assert spark.read.parquet(err).count() == 2
+
+
+def test_v3_compares_output_with_the_good_lane(spark, tmp_path, dirty_src):
+    """V3's input is the good lane (3 of 6 rows): keeping 1 row is 67% off,
+    beyond the 60% threshold; keeping 2 is 33% off and passes, where the
+    raw 6 rows would put it at 67%."""
+    cfg = _with_validation(_base_config("v3", dirty_src, str(tmp_path / "out"), thresholdLimit="60%"))
+    cfg["phase_2"]["transformed_data_count_validation"] = "true"
+    cfg["phase_2"]["data_transformations"][0]["sqlQuery"] = "SELECT * FROM src WHERE pk = 2"
+    with pytest.raises(ThresholdExceeded, match="vs input 3 "):
+        Orchestrator(spark).run(cfg)
+    cfg["phase_2"]["data_transformations"][0]["sqlQuery"] = "SELECT * FROM src WHERE pk > 1"
+    Orchestrator(spark).run(cfg)
+
+
 def test_targets_read_the_validated_view(spark, tmp_path, dirty_src):
     """A target naming the validated input directly gets the good lane."""
     out = str(tmp_path / "direct")
